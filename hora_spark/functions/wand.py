@@ -22,7 +22,13 @@ Rather than a per-doc Python loop (banned: per-row Python), the pruning is
 *block-granular and batch-ordered*: elementary doc-id intervals are ranked
 by their summed upper bound and decoded in descending-bound batches; after
 each batch θ tightens, and the loop stops at the first interval whose bound
-≤ θ. Everything inside a batch is numpy.
+≤ θ. Each batch is scored in ONE numpy pass over its intervals.
+
+A posting source need not be one segment row: shards are disjoint,
+ascending doc-id ranges, so one term's rows from several shards chain into
+one valid posting list (TermPosting.chain). The query layer hands the
+kernel one chain per source for every shard a task receives, so one
+shard_topk call per query covers the whole task.
 """
 
 from __future__ import annotations
@@ -33,7 +39,8 @@ from hora_spark.functions.codec import decode_block, segment_gather
 
 
 class TermPosting:
-    """Decoded-on-demand posting list of one (term, shard) segment row.
+    """Decoded-on-demand posting list of one (term, shard) segment row,
+    or a chain of such rows over ascending, disjoint doc ranges.
 
     Doc lengths ride WITH the posting (dl_blocks aligned to tf_blocks), so
     scoring a rare term decodes O(posting) bytes — no shard-wide norms
@@ -44,11 +51,15 @@ class TermPosting:
     Indexes built with IndexConfig.store_dl=False have no dl_blocks; the
     caller then supplies dl_lookup = (sorted doc ids, dls) decoded from
     the shard's norms sidecar, and per-block dls come from a searchsorted
-    lookup — byte-identical scores, shard-proportional decode cost."""
+    lookup — byte-identical scores, shard-proportional decode cost.
+
+    block_base[j] is the id block j's doc gaps start from: 0 for a row's
+    first block, the previous block's last id otherwise. It is explicit
+    (not block_last[j - 1]) so chained rows keep their own encoding."""
 
     __slots__ = ("idf", "doc_blocks", "tf_blocks", "dl_blocks", "block_last",
-                 "block_max", "block_start", "_cache", "dl_lookup",
-                 "pos_blocks", "_pos_cache")
+                 "block_max", "block_start", "block_base", "_cache",
+                 "dl_lookup", "pos_blocks", "_pos_cache")
 
     def __init__(self, idf, doc_blocks, tf_blocks, dl_blocks, block_last,
                  block_max, dl_lookup=None, pos_blocks=None):
@@ -59,6 +70,8 @@ class TermPosting:
         self.dl_lookup = dl_lookup
         self.block_last = np.asarray(block_last, dtype=np.int64)
         self.block_max = np.asarray(block_max, dtype=np.float64)
+        self.block_base = np.zeros_like(self.block_last)
+        self.block_base[1:] = self.block_last[:-1]
         # first doc id of each block = prev block's last + 1 (lower bound);
         # block j covers doc ids in [block_start[j], block_last[j]]
         self.block_start = np.empty_like(self.block_last)
@@ -69,11 +82,41 @@ class TermPosting:
         self.pos_blocks = pos_blocks
         self._pos_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
+    @classmethod
+    def chain(cls, parts: list["TermPosting"]) -> "TermPosting":
+        """One posting list from sources of the SAME term whose doc ranges
+        ascend and are disjoint (one row per doc-range shard, in shard
+        order). Blocks keep their bytes, bases and upper bounds, so every
+        block decodes and bounds exactly as in its own row; each doc still
+        lives in one block, so scores are unchanged. The parts share one
+        dl_lookup (the task's norms) and must agree on the dl layout."""
+        if len(parts) == 1:
+            return parts[0]
+        dl_blocks = [blk for p in parts for blk in p.dl_blocks]
+        if len(dl_blocks) not in (0, sum(len(p.doc_blocks) for p in parts)):
+            raise ValueError("chained postings mix dl layouts")
+        out = cls(
+            parts[0].idf,
+            [blk for p in parts for blk in p.doc_blocks],
+            [blk for p in parts for blk in p.tf_blocks],
+            dl_blocks,
+            np.concatenate([p.block_last for p in parts]),
+            np.concatenate([p.block_max for p in parts]),
+            dl_lookup=parts[0].dl_lookup,
+            pos_blocks=([blk for p in parts for blk in p.pos_blocks]
+                        if all(p.pos_blocks for p in parts) else None),
+        )
+        if (np.diff(out.block_last) <= 0).any():
+            raise ValueError("chained postings must cover ascending, "
+                             "disjoint doc ranges")
+        out.block_base = np.concatenate([p.block_base for p in parts])
+        return out
+
     def decode(self, j: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         got = self._cache.get(j)
         if got is None:
-            base = int(self.block_last[j - 1]) if j > 0 else 0
-            ids = decode_block(self.doc_blocks[j], base=base, delta=True)
+            ids = decode_block(self.doc_blocks[j], base=int(self.block_base[j]),
+                               delta=True)
             tfs = decode_block(self.tf_blocks[j], delta=False)
             if len(self.dl_blocks):
                 dls = decode_block(self.dl_blocks[j], delta=False)
@@ -139,6 +182,13 @@ def _in_sorted(sorted_arr: np.ndarray, vals: np.ndarray) -> np.ndarray:
     return sorted_arr[idx] == vals
 
 
+def _in_intervals(ids: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Boolean membership of ids in the union of the sorted, disjoint
+    closed intervals [lo[i], hi[i]]."""
+    i = np.searchsorted(lo, ids, side="right") - 1
+    return (i >= 0) & (ids <= hi[np.maximum(i, 0)])
+
+
 def _tf_sat(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:
     tf = tf.astype(np.float64)
     return tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
@@ -161,8 +211,8 @@ def _topk(doc_ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, 
 def _score_terms_on_docs(
     terms: list[TermPosting],
     blocks_per_term: list[np.ndarray],
-    lo: int,
-    hi: int,
+    lo: np.ndarray,
+    hi: np.ndarray,
     avgdl: float,
     k1: float,
     b: float,
@@ -176,9 +226,12 @@ def _score_terms_on_docs(
     dismax_tb: float | None = None,
     demote: tuple[np.ndarray, float] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Exact scores of all docs with id in [lo, hi] across `terms`,
-    decoding only the listed blocks. Accumulation order = term list order
-    (sorted by term at the call site) → deterministic float sums.
+    """Exact scores of all docs with id in any interval [lo[i], hi[i]]
+    (sorted, disjoint) across `terms`, decoding only the listed blocks,
+    each once. Accumulation order = term list order (sorted by term at
+    the call site) → deterministic float sums: a doc lives in one block
+    of each source, so its sum is the same however the intervals are
+    batched.
 
     dismax_tb: disjunction-max score combiner (Lucene DisjunctionMaxQuery
     / ES dis_max): None = BM25 sum (default); a float in [0, 1] switches
@@ -248,27 +301,37 @@ def _score_terms_on_docs(
     is sound because the cursor comes from this engine's own previous
     page — recomputing the same doc's score is bit-identical (pinned
     summation order)."""
-    need_slots = required is not None or min_match_slots is not None
-    all_ids: list[np.ndarray] = []
-    all_contrib: list[np.ndarray] = []
-    all_slot: list[np.ndarray] = []
+    # gather every listed block first, then mask and score the batch in
+    # one vectorized pass (the elementwise float ops are the same as per
+    # block, and contributions stay in term order → identical sums)
+    ids_l: list[np.ndarray] = []
+    tf_l: list[np.ndarray] = []
+    dl_l: list[np.ndarray] = []
+    slot_l: list[int] = []
+    span: dict[tuple[int, int], tuple[int, int]] = {}  # (slot, block) → rows
+    n = 0
     for si, (t, blocks) in enumerate(zip(terms, blocks_per_term)):
         for j in blocks:
             ids, tfs, dls = t.decode(int(j))
-            m = (ids >= lo) & (ids <= hi)
-            if not m.any():
-                continue
-            all_ids.append(ids[m])
-            all_contrib.append(
-                t.idf * _tf_sat(tfs[m], dls[m].astype(np.float64), avgdl, k1, b)
-            )
-            if need_slots:
-                all_slot.append(np.full(int(m.sum()), si, np.int32))
-    if not all_ids:
+            ids_l.append(ids)
+            tf_l.append(tfs)
+            dl_l.append(dls)
+            slot_l.append(si)
+            span[si, int(j)] = (n, n + len(ids))
+            n += len(ids)
+    if not n:
         return np.empty(0, np.int64), np.empty(0, np.float64)
-    cat_ids = np.concatenate(all_ids)
-    cat_con = np.concatenate(all_contrib)
-    cat_slot = np.concatenate(all_slot) if need_slots else None
+    cat_ids = np.concatenate(ids_l)
+    in_batch = _in_intervals(cat_ids, lo, hi)
+    cat_slot = np.repeat(np.array(slot_l, np.int32),
+                         [len(a) for a in ids_l])[in_batch]
+    cat_ids = cat_ids[in_batch]
+    if not len(cat_ids):
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    idfs = np.array([t.idf for t in terms], np.float64)
+    cat_con = idfs[cat_slot] * _tf_sat(
+        np.concatenate(tf_l)[in_batch],
+        np.concatenate(dl_l)[in_batch].astype(np.float64), avgdl, k1, b)
     uids, inv = np.unique(cat_ids, return_inverse=True)
     scores = np.zeros(len(uids), dtype=np.float64)
     np.add.at(scores, inv, cat_con)
@@ -341,7 +404,7 @@ def _score_terms_on_docs(
                     t = terms[ti]
                     for j in blocks_per_term[ti]:
                         ids, tfs, _ = t.decode(int(j))
-                        m = (ids >= lo) & (ids <= hi)
+                        m = in_batch[slice(*span[ti, int(j)])]
                         if not m.any():
                             continue
                         flat, offs = t.decode_pos(int(j))
@@ -431,21 +494,23 @@ def shard_topk(
     b: float,
     prune: bool = True,
     batch_docs: int = 8192,
-    first_batch_docs: int | None = None,
     deleted: np.ndarray | None = None,
     allowed: np.ndarray | None = None,
     min_match: int = 0,
     min_match_slots: list[int] | None = None,
     required: list[list[int]] | None = None,
     chains: list[tuple[list[tuple[int, list[int]]], int | None, bool]] | None = None,
-    phrase: list[tuple[int, list[int]]] | None = None,
-    near_window: int | None = None,
-    near_unordered: bool = False,
     after: tuple[float, int] | None = None,
     dismax_tb: float | None = None,
     demote: tuple[np.ndarray, float] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Top-k (doc_ids, scores) of one shard for one query.
+    """Top-k (doc_ids, scores) for one query over every doc the postings
+    cover — one shard, or all of a task's shards when each term's rows
+    are chained (TermPosting.chain), which also shares θ across them.
+    Each WAND batch is scored in ONE _score_terms_on_docs call over its
+    sorted, disjoint elementary intervals; θ moves only between batches,
+    so the blocks decoded and the scores returned do not depend on how a
+    batch's intervals are grouped.
 
     demote: (sorted doc ids, factor in (0, 1]) — the ES boosting-query
     combiner: matching docs stay eligible but score × factor (see
@@ -466,9 +531,6 @@ def shard_topk(
     chains: positional clauses (see _score_terms_on_docs) — every chain
     must match; θ then tracks the k-th best CHAIN-qualified score,
     keeping block-max pruning exact for phrases/proximity too.
-    phrase/near_window/near_unordered are the single-chain legacy spelling
-    (phrase= slots, near_window= proximity switch) — normalized into one
-    chains entry here.
 
     required: must clauses — slot-index groups that every result doc has
     to match (Lucene '+term'); dropped pre-heap like min_match, so the
@@ -492,19 +554,9 @@ def shard_topk(
     appear; scores of kept docs are the unfiltered scores (stats global).
     WAND pruning stays exact: the unfiltered block bounds only
     over-estimate the filtered scores.
-    first_batch_docs: smaller width cap used while θ is still −inf — a
-    SOUND early-θ seed (θ only ever comes from actually-scored docs; a
-    cross-shard seed from block upper bounds would be unsound because a
-    bound need not be attained by any doc). Establishing θ after less
-    decoded width lets later batches skip more; None = batch_docs
-    (measured A/B in tools/theta_ab.py, PLANS.md §3).
     """
     if not terms:
         return np.empty(0, np.int64), np.empty(0, np.float64)
-
-    if phrase is not None:  # legacy single-chain spelling
-        chains = (list(chains) if chains else []) + [
-            (phrase, near_window, near_unordered)]
 
     if not prune or k is None:
         # k=None = match ENUMERATION (facets / match counting / export):
@@ -512,7 +564,8 @@ def shard_topk(
         # enumeration is inherently exhaustive, so block-max cannot help
         blocks_all = [np.arange(len(t.block_last)) for t in terms]
         ids, scores = _score_terms_on_docs(
-            terms, blocks_all, 0, np.iinfo(np.int64).max, avgdl, k1, b,
+            terms, blocks_all, np.zeros(1, np.int64),
+            np.full(1, np.iinfo(np.int64).max), avgdl, k1, b,
             deleted, allowed, min_match, min_match_slots, required, chains,
             after, dismax_tb, demote,
         )
@@ -544,10 +597,10 @@ def shard_topk(
         cover.append(np.where(ok, j, -1))
 
     order = np.argsort(-ub, kind="stable")
+    width_of = hi_edges - lo_edges + 1
     top_ids = np.empty(0, np.int64)
     top_scores = np.empty(0, np.float64)
     theta = -np.inf
-    first_cap = first_batch_docs or batch_docs
     pos = 0
     while pos < len(order):
         # strict <: a doc can ATTAIN ub (max in every covering block), and a
@@ -555,36 +608,30 @@ def shard_topk(
         # ub == θ would break exact tie-break identity with the oracle
         if ub[order[pos]] < theta and len(top_ids) >= k:
             break  # every remaining interval is provably below θ
-        # take a batch of intervals (bounded decoded width); while θ is
-        # still unset, the smaller first_cap applies
-        cap = batch_docs if theta > -np.inf else first_cap
-        batch = [order[pos]]
-        width = int(hi_edges[order[pos]] - lo_edges[order[pos]] + 1)
+        # take a batch of intervals (bounded decoded width)
+        start = pos
+        width = int(width_of[order[pos]])
         pos += 1
-        while pos < len(order) and width < cap:
+        while pos < len(order) and width < batch_docs:
             nxt = order[pos]
             if ub[nxt] < theta and len(top_ids) >= k:
                 break
-            batch.append(nxt)
-            width += int(hi_edges[nxt] - lo_edges[nxt] + 1)
+            width += int(width_of[nxt])
             pos += 1
-        batch = np.array(batch)
-        ids_list, sc_list = [], []
-        for i in batch:
-            blocks_per_term = [
-                np.array([cover[ti][i]]) if cover[ti][i] >= 0 else np.empty(0, np.int64)
-                for ti in range(len(terms))
-            ]
-            ids_i, sc_i = _score_terms_on_docs(
-                terms, blocks_per_term, int(lo_edges[i]), int(hi_edges[i]),
-                avgdl, k1, b, deleted, allowed, min_match, min_match_slots,
-                required, chains, after, dismax_tb, demote,
-            )
-            ids_list.append(ids_i)
-            sc_list.append(sc_i)
-        ids_b = np.concatenate([top_ids] + ids_list)
-        sc_b = np.concatenate([top_scores] + sc_list)
-        top_ids, top_scores = _topk(ids_b, sc_b, k)
+        # interval indices ascend with doc id: sorting them sorts the
+        # batch's intervals for the one-pass membership mask
+        batch = np.sort(order[start:pos])
+        blocks_per_term = []
+        for c in cover:
+            cb = c[batch]
+            blocks_per_term.append(np.unique(cb[cb >= 0]))
+        ids_b, sc_b = _score_terms_on_docs(
+            terms, blocks_per_term, lo_edges[batch], hi_edges[batch],
+            avgdl, k1, b, deleted, allowed, min_match, min_match_slots,
+            required, chains, after, dismax_tb, demote,
+        )
+        top_ids, top_scores = _topk(np.concatenate([top_ids, ids_b]),
+                                    np.concatenate([top_scores, sc_b]), k)
         if len(top_ids) >= k:
             theta = top_scores[-1] if len(top_scores) else -np.inf
     return top_ids, top_scores

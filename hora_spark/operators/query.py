@@ -11,13 +11,18 @@ Lifecycle (mirrors SURVEY.md §3.2):
     `search_n_center` probe analog: only matching index data is read.
     The per-shard doc-length sidecar rides in the same scan as a
     reserved-term row, so no second table, no cogroup, no driver state.
-  → per shard: DAAT + block-max WAND in a grouped pandas UDF → local top-k
-  → global top-k: per-query window rank on (score DESC, doc_id ASC)
-    (the distributed form of hora's heap truncation,
-    /root/reference/src/index/hnsw_idx.rs:434-437)
+  → per task: DAAT + block-max WAND in a pandas UDF, ONE kernel call
+    (shard_topk) per query per task — a term's rows from every shard the
+    task receives chain into one posting list per source, since shards
+    are disjoint doc ranges → the task's top-k
+  → global top-k: the single-task plan (small indexes) already holds it;
+    the distributed plan (one task per shard) ranks per query with a
+    window on (score DESC, doc_id ASC) (the distributed form of hora's
+    heap truncation, src/index/hnsw_idx.rs:434-437 in hora)
 
-Queries are BATCHED: one Spark job scores any number of queries; the shard
-UDF loops over queries in numpy. Single-query latency is the batch of one.
+Queries are BATCHED: one Spark job scores any number of queries; the
+task's UDF loops over queries in numpy. Single-query latency is the batch
+of one.
 """
 
 from __future__ import annotations
@@ -59,13 +64,22 @@ def _shard_search(
     deleted: np.ndarray | None = None,
     allowed: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """One shard group: this shard's segment rows for all query terms.
-    Runs WAND once per query. Doc lengths are decoded from the postings'
-    own dl_blocks — the query touches O(matched posting) bytes, never a
-    shard-sized sidecar (rare-term cost ∝ posting size, not shard size).
-    Exception: indexes built with store_dl=False carry no dl_blocks; the
-    scan then includes the shard's norms rows and dls come from a sorted
-    lookup over the decoded sidecar (scores byte-identical)."""
+    """The segment rows of every query term in the shards one task
+    receives — one shard (the distributed and cogroup plans) or the whole
+    scan (the single-task plan). Runs WAND once per query: a term's rows
+    are chained across the shards, in shard_id order, into one posting
+    chain per source ordinal (its k-th segment row within each shard —
+    base, then each append delta), so one shard_topk call scores every
+    shard. Exact because shards are disjoint ascending doc ranges and
+    every doc lives in exactly one source. Each query's rows come out
+    ranked (score DESC, doc_id ASC) and capped at k, in query_id order.
+
+    Doc lengths are decoded from the postings' own dl_blocks — the query
+    touches O(matched posting) bytes, never a shard-sized sidecar
+    (rare-term cost ∝ posting size, not shard size). Exception: indexes
+    built with store_dl=False carry no dl_blocks; the scan then includes
+    the shards' norms rows and dls come from a sorted lookup over the
+    decoded sidecars (scores byte-identical)."""
     is_norms = seg_pdf["term"] == NORMS_TERM
     norms_pdf = seg_pdf[is_norms]
     seg_pdf = seg_pdf[~is_norms]
@@ -83,17 +97,21 @@ def _shard_search(
         ndls = np.concatenate(dls_all).astype(np.float64)
         order = np.argsort(nids, kind="mergesort")
         dl_lookup = (nids[order], ndls[order])
-    # a term can have MULTIPLE segment rows (base build + appended deltas);
-    # each is an independent posting source — every doc lives in exactly
-    # one source, so summing per-source contributions stays exact and the
-    # per-source block maxima still add up to a true upper bound
+    # a term can have MULTIPLE segment rows per shard (base build +
+    # appended deltas); each is an independent posting source — every doc
+    # lives in exactly one source, so summing per-source contributions
+    # stays exact and the per-source block maxima still add up to a true
+    # upper bound. Rows are visited in shard_id order, so each source
+    # ordinal's rows ascend in doc id and chain into one posting list.
+    seg_pdf = seg_pdf.sort_values("shard_id", kind="mergesort")
     excl_all = ({t for q in queries for t in q[3]}
                 | {t for q in queries if q[11] is not None
                    for t in q[11][0]})  # boosting-query negative terms
     # exclusion terms need only their DOC IDS (no idf, no tf/dl decode):
     # keep the raw compressed sources and decode ids lazily, once per term
     excl_raw: dict[str, list[tuple[list, np.ndarray]]] = {}
-    postings: dict[str, list[TermPosting]] = {}
+    sources: dict[str, list[list[TermPosting]]] = {}  # term → ordinal → rows
+    ordinal: dict[tuple[int, str], int] = {}
     for row in seg_pdf.itertuples(index=False):
         if row.term in excl_all:
             excl_raw.setdefault(row.term, []).append(
@@ -108,18 +126,25 @@ def _shard_search(
         tf_max = np.asarray(row.block_tf_max, dtype=np.float64)
         dl_min = np.asarray(row.block_dl_min, dtype=np.float64)
         ub = idf * tf_max / (tf_max + k1 * (1.0 - b + b * dl_min / avgdl))
-        postings.setdefault(row.term, []).append(TermPosting(
+        o = ordinal[row.shard_id, row.term] = ordinal.get(
+            (row.shard_id, row.term), -1) + 1
+        chains_t = sources.setdefault(row.term, [])
+        if o == len(chains_t):
+            chains_t.append([])
+        chains_t[o].append(TermPosting(
             idf, row.doc_blocks, row.tf_blocks, row.dl_blocks, row.block_last,
             ub, dl_lookup=dl_lookup,
             # the scan includes pos_blocks only for phrase queries
             pos_blocks=(list(pb) if (pb := getattr(row, "pos_blocks", None))
                         is not None and len(pb) else None),
         ))
+    postings = {t: [TermPosting.chain(rows) for rows in chains_t]
+                for t, chains_t in sources.items()}
     excl_cache: dict[str, np.ndarray | None] = {}
 
     def _excl_ids(term: str) -> np.ndarray | None:
-        """Sorted unique doc ids of one exclusion term in this shard —
-        decoded once per (shard, term) regardless of how many queries
+        """Sorted unique doc ids of one exclusion term in these shards —
+        decoded once per (task call, term) regardless of how many queries
         exclude it. Decodes ONLY doc_blocks (ids): exclusion needs no
         tf/dl, so a store_dl=False layout needs no norms lookup here."""
         if term in excl_cache:
@@ -166,7 +191,7 @@ def _shard_search(
                 plist = postings[t]
                 # per-term boost (term^w): boosted VIEWS share the
                 # parent's decode caches, so blocks decode once per
-                # shard however many queries boost this term
+                # task however many queries boost this term
                 w = boosts.get(t, 1.0) if boosts else 1.0
                 if w != 1.0:
                     plist = [p.boosted(w) for p in plist]
@@ -866,6 +891,10 @@ def search_topk(
             "(the analog of searching an un-built hora index)"
         )
     avgdl = float(meta["avgdl"])
+    if not np.isfinite(avgdl):
+        # a NaN score would sort last in the single-task plan (numpy) but
+        # first in the distributed one (Spark): refuse corrupt stats
+        raise ValueError(f"snapshot avgdl is not finite ({avgdl!r})")
     k1, b = cfg.bm25.k1, cfg.bm25.b
 
     # normalize to per-query (text, mode, near_window, exclude,
@@ -1204,6 +1233,9 @@ def search_topk(
     if missing:
         _idf_lookup(store, version, cache, cfg, missing)
     idf_map = {t: cache[t] for t in all_terms if cache[t] is not None}
+    bad_idf = sorted(t for t, v in idf_map.items() if not np.isfinite(v))
+    if bad_idf:  # same reason as the avgdl check: no NaN may be scored
+        raise ValueError(f"snapshot idf is not finite for terms {bad_idf}")
     if not idf_map:
         # no scoring term is live: a fielded filter alone never
         # surfaces a doc (filter clauses score 0 by definition)
@@ -1353,33 +1385,22 @@ def search_topk(
             # ONE task: the query state (specs/idf/deletes/keep-list) is
             # query-sized and rides the task closure — four explicit
             # broadcast variables would only add py4j round trips here
-            # (the distributed plans below keep their broadcasts). The
-            # global per-query top-k and the final (query_id, score DESC,
-            # doc_id ASC) order come from one local pandas sort, so the
-            # Window/row_number + orderBy plan nodes disappear too.
+            # (the distributed plans below keep their broadcasts). One
+            # _shard_search over the whole scan chains every shard's
+            # rows, so each query is ONE shard_topk call whose rows are
+            # already its global top-k in (score DESC, doc_id ASC) order,
+            # emitted in query_id order: the Window/row_number + orderBy
+            # plan nodes and any re-sort disappear.
             def run_one(batches):
                 parts = [p for p in batches if len(p)]
                 if not parts:
                     return
-                pdf = pd.concat(parts, ignore_index=True)
-                outs = []
-                for _, g in pdf.groupby("shard_id", sort=False):
-                    out = _shard_search(
-                        g, q_specs, idf_map, k, avgdl, k1, b,
-                        prune, deleted=del_arr, allowed=allow_arr)
-                    if len(out):
-                        outs.append(out)
-                if not outs:
-                    return
-                if k is None:  # enumeration: unordered by contract
-                    yield from outs
-                    return
-                allr = pd.concat(outs, ignore_index=True)
-                allr.sort_values(
-                    ["query_id", "score", "doc_id"],
-                    ascending=[True, False, True], kind="mergesort",
-                    ignore_index=True, inplace=True)
-                yield allr.groupby("query_id", sort=False).head(k)
+                out = _shard_search(
+                    pd.concat(parts, ignore_index=True), q_specs, idf_map,
+                    k, avgdl, k1, b, prune, deleted=del_arr,
+                    allowed=allow_arr)
+                if len(out):
+                    yield out
 
             # already capped at k per query, ranked, and globally ordered
             return segs.coalesce(1).mapInPandas(run_one, RESULT_SCHEMA)

@@ -35,9 +35,36 @@ def _rows(df):
     return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
 
 
-def test_single_task_plan_equals_distributed(spark, eng):
+def _exact_rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
+@pytest.fixture(scope="module")
+def churned(spark, tmp_path_factory):
+    """A positional 4-shard index with one append_build delta and one
+    delete: multi-source postings and tombstones in the kernel."""
+    from hora_spark.datagen import generate_transcripts
+    from hora_spark.streaming.incremental import append_build
+
+    cfg = EngineConfig(index=IndexConfig(block_size=8, n_buckets=4,
+                                         store_positions=True))
+    e = Engine(spark, str(tmp_path_factory.mktemp("r06churn")), cfg)
+    e.build(generate_transcripts(spark, 40, seed=5), id_col=None,
+            order_cols=["conv_id", "turn_idx"])
+    n_base = int(e.store.meta()["n_docs"])
+    append_build(spark, e.store, generate_transcripts(spark, 6, seed=6),
+                 cfg=cfg, batch_id="d1")
+    victim = e.search("water people", k=1).collect()[0]["doc_id"]
+    e.delete([victim])
+    return e, n_base, victim
+
+
+def test_single_task_plan_equals_distributed(spark, eng, churned):
     """cfg.max_single_task_scan_bytes=0 forces the shard-exchange plan;
-    both plans must return identical ordered rows for a mixed workload."""
+    both plans must return identical ordered rows, floats unrounded, for
+    a mixed workload — including on an index with an append delta and a
+    delete, where the single task chains each term's rows across shards
+    and sources into one kernel call per query."""
     forced = Engine(spark, eng.store.root,
                     dataclasses.replace(eng.cfg, max_single_task_scan_bytes=0))
     for q, kw in [
@@ -46,8 +73,8 @@ def test_single_task_plan_equals_distributed(spark, eng):
         ("join hash row", {"exclude": "dup"}),
         ("dup join", {"min_match": 0}),
     ]:
-        fast = _rows(eng.search(q, k=7, **kw))
-        slow = _rows(forced.search(q, k=7, **kw))
+        fast = _exact_rows(eng.search(q, k=7, **kw))
+        slow = _exact_rows(forced.search(q, k=7, **kw))
         assert fast == slow, (q, kw)
         if not kw:
             assert fast, "expected non-empty results for the base query"
@@ -56,6 +83,57 @@ def test_single_task_plan_equals_distributed(spark, eng):
     assert "Exchange" not in plan
     plan2 = forced.search("join hash row", k=7)._jdf.queryExecution().toString()
     assert "Exchange" in plan2
+
+    ce, n_base, victim = churned
+    cforced = Engine(spark, ce.store.root,
+                     dataclasses.replace(ce.cfg, max_single_task_scan_bytes=0))
+    page1 = _exact_rows(ce.search("water people", k=9))
+    cursor = (page1[-1][1], page1[-1][0])
+    specs = [
+        {"text": "water people"},
+        {"text": "the and", "mode": "all"},
+        {"text": "water people", "exclude": "time"},
+        {"text": "the of and", "min_match": 2},
+        {"text": "of the", "mode": "phrase"},
+        {"text": "the of", "mode": "near", "near_window": 3},
+        {"text": "water people", "boosts": {"people": 2.5}},
+        {"text": "water people", "after": cursor},
+    ]
+    seen = set()
+    for spec in specs:
+        kw = {key: v for key, v in spec.items() if key != "text"}
+        fast = _exact_rows(ce.search(spec["text"], k=9, **kw))
+        assert fast == _exact_rows(cforced.search(spec["text"], k=9, **kw)), spec
+        assert fast, spec
+        seen.update(d for d, _ in fast)
+    assert victim not in seen
+    assert max(seen) >= n_base, "some hit must come from the append delta"
+    # the same specs as one batch: one task, one kernel call per query
+    batch = ce.searches(specs, k=9)
+    assert _exact_rows(batch) == _exact_rows(cforced.searches(specs, k=9))
+    assert "Exchange" not in batch._jdf.queryExecution().toString()
+    # page 2 continues page 1 exactly
+    assert _exact_rows(ce.search("water people", k=4, after=cursor)) == \
+        _exact_rows(ce.search("water people", k=13))[9:]
+
+
+def test_non_finite_snapshot_stats_raise(spark, eng, monkeypatch):
+    """A NaN score would sort last in the single-task plan (numpy) and
+    first in the distributed one (Spark), so search refuses non-finite
+    idf or avgdl before it builds a plan."""
+    v = eng.store.current_version()
+    eng.search("join hash", k=3).collect()  # fills the snapshot's cache
+    cache = eng._idf_caches[v]
+    monkeypatch.setitem(cache, "join", float("nan"))
+    with pytest.raises(ValueError, match="idf is not finite"):
+        eng.search("join hash", k=3)
+    monkeypatch.undo()
+    assert eng.search("join hash", k=3).collect()
+    real_meta = eng.store.meta
+    monkeypatch.setattr(eng.store, "meta", lambda version=None: {
+        **real_meta(version), "avgdl": float("inf")})
+    with pytest.raises(ValueError, match="avgdl is not finite"):
+        eng.search("join hash", k=3)
 
 
 def test_single_task_batched_merge_equals_distributed(spark, eng):
