@@ -73,10 +73,6 @@ def tokenize_udf_unicode(texts: pd.Series) -> pd.Series:
     return texts.fillna("").str.lower().str.findall(_TOKEN_RE_UNI)
 
 
-def get_tokenize_udf(unicode: bool = False):
-    return tokenize_udf_unicode if unicode else tokenize_udf
-
-
 def token_run_regex(unicode: bool = False):
     """The compiled PYTHON run-matching regex for the requested mode —
     what the Arrow build passes feed to pandas .str.findall."""

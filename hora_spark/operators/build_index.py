@@ -53,7 +53,6 @@ from hora_spark.operators.corpus import assign_doc_ids
 from hora_spark.operators.segments import (
     NORMS_TERM,
     SEGMENT_SCHEMA,
-    encode_shard_rows,
     map_partial_segments,
     merge_shard_rows,
 )
@@ -63,10 +62,6 @@ LINEAGE_COLS = [
     "build_id", "seg_id", "term_lo", "term_hi", "n_terms",
     "doc_count", "bytes", "wall_time_s",
 ]
-
-# back-compat alias (incremental/append path encodes from tuple rows)
-_encode_shard = encode_shard_rows
-
 
 def _has_parquet(spark: SparkSession, d: str) -> bool:
     """True if the dir contains any parquet file — via the Hadoop

@@ -13,11 +13,12 @@ doc-length sidecar. Three producers emit rows of this shape:
   55M-row Arrow conversions dominated the whole build before this).
   The reference analog is the per-thread partial work rayon merges
   (/root/reference/src/core/knn.rs:250-256) — here merge is associative
-  so partials compose exactly.
-- `merge_shard_rows`: the REDUCE side and the compaction path — decode
-  any set of partial/full rows of one shard, rebuild canonical rows via
-  `encode_shard_rows`. Output depends only on the logical (doc, term, tf,
-  dl) set, never on partitioning (the determinism invariant).
+  so partials compose exactly. Appends run the same map side.
+- `merge_shard_rows`: the REDUCE side (build and appends) and the
+  compaction path — decode any set of partial/full rows of one shard,
+  rebuild canonical rows via `encode_shard_rows`. Output depends only on
+  the logical (doc, term, tf, dl) set, never on partitioning (the
+  determinism invariant).
 - `encode_shard_rows`: tuples → canonical rows; one numpy pass
   (factorize + lexsort + reduceat), per-block work is slice+tobytes.
 

@@ -4,14 +4,17 @@ hora supports adding items to an already-built HNSW via
 `add_single_item` (/root/reference/src/index/hnsw_idx.rs:498-521) — a
 shared-memory graph mutation. The log-structured distributed equivalent:
 
-- `append_build`: new rows get doc_ids continuing after the current max,
-  are tokenized/scored with the FROZEN corpus stats (N, avgdl, df stay at
-  build-time values, exactly as hora's graph keeps its structure when
-  items are appended — a rebuild refreshes stats), and are encoded into
-  NEW segment rows appended to the snapshot. Queries see a merge-on-read
-  union: multiple segment rows per (shard, term) are scored as independent
-  posting sources (each doc lives in exactly one source, so scores are
-  exact; upper bounds add, staying true bounds).
+- `append_build`: new rows get doc_ids continuing after the current max
+  and run the build's own pipeline: the id pass (whose per-partition
+  counts give the raw row count), the one-pass tokenize+pack map side
+  (`map_partial_segments`, with the snapshot's tokenizer, positions and
+  field schema), then `groupBy(shard)` → `merge_shard_rows` → NEW segment
+  rows appended to the snapshot. Corpus stats stay FROZEN (N, avgdl, df
+  keep build-time values, exactly as hora's graph keeps its structure
+  when items are appended — a rebuild refreshes stats). Queries see a
+  merge-on-read union: multiple segment rows per (shard, term) are scored
+  as independent posting sources (each doc lives in exactly one source,
+  so scores are exact; upper bounds add, staying true bounds).
 
 - `merge_segments`: compaction of the storage layout: decode every
   (shard, term)'s row set, concatenate (doc-id-sorted), re-encode as a
@@ -35,9 +38,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hora_spark.config import EngineConfig
-from hora_spark.operators.segments import SEGMENT_SCHEMA, encode_shard_rows, merge_shard_rows
+from hora_spark.operators.build_index import _commit_stats_and_lineage, _has_parquet
 from hora_spark.operators.corpus import assign_doc_ids
-from hora_spark.functions.tokenize import get_tokenize_udf
+from hora_spark.operators.segments import (
+    NORMS_TERM,
+    SEGMENT_SCHEMA,
+    map_partial_segments,
+    merge_shard_rows,
+)
 from hora_spark.sources.storage import SnapshotStore
 
 
@@ -50,117 +58,52 @@ def append_build(
     cfg: EngineConfig | None = None,
     batch_id: str = "delta-0",
 ) -> dict:
-    """Index a batch of NEW rows against an existing snapshot."""
+    """Index a batch of NEW rows against an existing snapshot, through the
+    build's own map side and shard merge."""
     cfg = cfg or EngineConfig()
     meta = store.meta()
-    shard_size = int(meta["shard_size"])
-    avgdl = float(meta["avgdl"])
     n_docs_old = int(meta["n_docs"])
     base_id = int(meta.get("next_doc_id", n_docs_old))
 
-    with_ids = assign_doc_ids(new_df, order_cols or ["conv_id", "turn_idx"]).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(base_id)
+    # next_doc_id advances by the PRE-filter count: assign_doc_ids numbers
+    # every raw row, so token-less texts still consume their ids (handing
+    # them to the next batch would give two docs one doc_id)
+    with_ids, n_raw = assign_doc_ids(
+        new_df, order_cols or ["conv_id", "turn_idx"], with_count=True)
+    with_ids = with_ids.withColumn("doc_id", F.col("doc_id") + F.lit(base_id))
+    # tokenizer, positions and field schema follow the INDEX (meta), not
+    # the caller's cfg — one index, one layout
+    partials = map_partial_segments(
+        with_ids, text_col, "doc_id", int(meta["shard_size"]),
+        unicode=bool(meta.get("unicode", False)),
+        store_positions=bool(meta.get("store_positions", False)),
+        field_cols=list(meta.get("field_cols") or []),
     )
-    # appended rows tokenize with the INDEX's pinned mode (one index, one
-    # tokenizer — same rule as the store_dl layout below)
-    tok_udf = get_tokenize_udf(bool(meta.get("unicode", False)))
-    base_all = with_ids.withColumn("terms", tok_udf(F.col(text_col))).withColumn(
-        "dl", F.size("terms")
-    )
-    # next_doc_id must advance by the PRE-filter count: assign_doc_ids
-    # numbered every raw row, so a batch containing token-less texts still
-    # consumed those ids — advancing by the live count only would hand the
-    # same ids to the next batch (two docs sharing a doc_id corrupts the
-    # sorted norms lookup and merges postings of different docs)
-    counts = base_all.agg(
-        F.count(F.lit(1)).alias("n_raw"),
-        F.sum((F.col("dl") > 0).cast("long")).alias("n_live"),
-    ).collect()[0]
-    n_raw = int(counts["n_raw"] or 0)
-    n_new = int(counts["n_live"] or 0)
-    base = base_all.filter(F.col("dl") > 0)
-
-    store_positions = bool(meta.get("store_positions", False))
-    # appended rows carry the INDEX's field postings too (meta, not the
-    # caller's cfg — one index, one field schema): each field column's
-    # value tokenizes with the pinned mode and qualifies as
-    # '<field>:<token>', exactly like map_partial_segments. Positions for
-    # field terms index into the doc's CONCATENATED field-token list (the
-    # batch build's layout); they are never read by queries (field terms
-    # can't enter positional chains) but keep the encode path uniform.
-    fld_cols = list(meta.get("field_cols") or [])
-    if fld_cols:
-        from hora_spark.functions.tokenize import tokens_col
-
-        uni = bool(meta.get("unicode", False))
-
-        def _qualified(fc: str):
-            # NB: a two-arg lambda in F.transform would bind the second
-            # parameter to the ELEMENT INDEX — close over fc instead
-            prefix = F.lit(fc + ":")
-            return F.transform(
-                tokens_col(F.col(fc).cast("string"), unicode=uni),
-                lambda t: F.concat(prefix, t))
-
-        f_terms = F.flatten(F.array(*[_qualified(fc) for fc in fld_cols]))
-        base = base.withColumn("fterms", f_terms)
-
-    def _tf_of(src: DataFrame, terms_col: str) -> DataFrame:
-        if store_positions:
-            # posexplode keeps each occurrence's within-doc position; the
-            # sorted list per (doc, term) feeds pos_blocks at encode
-            return (
-                src.select("doc_id", "dl",
-                           F.posexplode(terms_col).alias("pos", "term"))
-                .groupBy("doc_id", "dl", "term")
-                .agg(F.count(F.lit(1)).alias("tf"),
-                     F.sort_array(F.collect_list("pos")).alias("pos_list"))
-            )
-        return (
-            src.select("doc_id", "dl", F.explode(terms_col).alias("term"))
-            .groupBy("doc_id", "dl", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-
-    tf = _tf_of(base, "terms")
-    if fld_cols:
-        tf = tf.unionByName(_tf_of(base, "fterms"))
     # frozen stats: the stats table is NOT updated, so terms unseen at
     # build time have no idf and are not searchable until `rebuild`
     # (hora analog: a point inserted into a frozen graph can only link to
     # existing nodes). Segments store idf-free saturation maxima, so no
-    # stats join is needed here at all.
-    # exact integer DIV (not float `/`): must be bit-identical to the
-    # build's numpy `ids // shard_size` even for doc ids near 2^53
-    tf = tf.withColumn(
-        "shard_id", F.expr(f"CAST(CAST(doc_id AS BIGINT) DIV {shard_size} AS INT)")
+    # stats join is needed; merge_shard_rows emits each shard's norms row
+    # inline, so the delta commit is one table append.
+    block_size, store_dl = cfg.index.block_size, bool(meta.get("store_dl", True))
+    segs = partials.groupBy("shard_id").applyInPandas(
+        lambda pdf: merge_shard_rows(pdf, block_size, store_dl=store_dl),
+        SEGMENT_SCHEMA,
     )
-
-    k1, b = cfg.bm25.k1, cfg.bm25.b
+    d_seg = store.stage_dir("segments")
+    segs.write.mode("overwrite").partitionBy("shard_id").parquet(d_seg)
     updates: dict[str, list[str]] = {}
-    if n_new > 0:
-        # _encode_shard emits the reserved norms row per shard inline, so
-        # the delta commit is one table append. The layout mode follows the
-        # EXISTING index (meta), not the caller's cfg — one index, one mode.
-        block_size, store_dl = cfg.index.block_size, bool(meta.get("store_dl", True))
-
-        def enc(pdf):
-            if store_positions and len(pdf):
-                import numpy as np
-                pos_flat = np.concatenate(
-                    [np.asarray(p, np.int64) for p in pdf["pos_list"]]
-                )
-                return encode_shard_rows(pdf.drop(columns=["pos_list"]),
-                                         block_size, store_dl=store_dl,
-                                         pos_flat=pos_flat)
-            return encode_shard_rows(
-                pdf.drop(columns=["pos_list"], errors="ignore"),
-                block_size, store_dl=store_dl)
-
-        segs = tf.groupBy("shard_id").applyInPandas(enc, SEGMENT_SCHEMA)
-        d_seg = store.stage_dir("segments")
-        segs.write.mode("overwrite").partitionBy("shard_id").parquet(d_seg)
+    n_new = 0
+    # an all-token-less batch writes no parquet: commit no segment dir.
+    # Live docs are counted from the written norms rows (a JVM-only job;
+    # the known schema skips footer inference)
+    if _has_parquet(spark, d_seg):
         updates["segments"] = [d_seg]
+        n_new = int(
+            spark.read.schema(SEGMENT_SCHEMA).parquet(d_seg)
+            .filter(F.col("term") == NORMS_TERM)
+            .agg(F.sum("df_local")).collect()[0][0] or 0
+        )
 
     lineage = spark.createDataFrame(
         [(batch_id, -1, "", "", 0, n_new, 0, 0.0)],
@@ -248,15 +191,20 @@ def delete_docs(spark: SparkSession, store: SnapshotStore, doc_ids) -> dict:
     rebuild. doc_ids: iterable of ints or a one-column DataFrame."""
     if isinstance(doc_ids, DataFrame):
         df = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
+        n_new = None
     else:
-        df = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id long")
+        rows = [(int(i),) for i in doc_ids]
+        df = spark.createDataFrame(rows, "doc_id long")
+        n_new = len(rows)
     d = store.stage_dir("deletes")
     df.write.mode("overwrite").parquet(d)
     # cumulative tombstone count (an upper bound — re-deletes count twice)
     # rides in the meta so readers can choose broadcast vs cogroup delete
-    # filtering WITHOUT running a count job per query; counted from the
-    # written files, not by recomputing df
-    n_new = spark.read.parquet(d).count()
+    # filtering WITHOUT running a count job per query. An in-memory id
+    # list knows its length; a DataFrame is counted from the written
+    # files, not by recomputing df
+    if n_new is None:
+        n_new = spark.read.parquet(d).count()
     old = int(store.meta().get("n_deletes", 0))
     v = store.commit({"deletes": [d]}, replace=False,
                      meta={"n_deletes": old + n_new})
@@ -290,8 +238,6 @@ def rebuild(
     rebuild makes both permanent: search results become rank-identical to
     a from-scratch build over the live corpus."""
     import time
-
-    from hora_spark.operators.build_index import _commit_stats_and_lineage
 
     cfg = cfg or EngineConfig()
     meta = store.meta()

@@ -10,6 +10,8 @@ Reference behavior mirrored:
   results equal a from-scratch build over the live corpus.
 """
 
+import dataclasses
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -46,6 +48,37 @@ def test_delete_excludes_exactly_and_keeps_survivor_scores(spark, tmp_path):
     # the previous rank-3 doc is the new rank-1... i.e. survivors keep order
     survivors_before = [(d, s) for d, s in before if d not in victims]
     assert after[: len(survivors_before)] == survivors_before
+
+
+def test_delete_counts_rows_written(spark, tmp_path):
+    """n_deletes counts the tombstone rows written — an upper bound: a
+    Python list that repeats an id counts it twice, and a one-column
+    DataFrame counts its rows. Both plans exclude every victim."""
+    df = generate_transcripts(spark, 30, seed=13)
+    eng = Engine(spark, str(tmp_path / "dc"), CFG)
+    eng.build(df, id_col=None, order_cols=["conv_id", "turn_idx"])
+    q = "water people time"
+    top = [r["doc_id"] for r in eng.search(q, k=6).collect()]
+
+    out = eng.delete([top[0], top[1], top[0]])
+    assert out["n_deletes"] == 3
+    assert int(eng.store.meta()["n_deletes"]) == 3
+    out = eng.delete(spark.createDataFrame([(top[2],), (top[3],)], "victim int"))
+    assert out["n_deletes"] == 5
+    assert int(eng.store.meta()["n_deletes"]) == 5
+
+    victims = set(top[:4])
+    forced = Engine(spark, eng.store.root,
+                    dataclasses.replace(CFG, max_single_task_scan_bytes=0))
+    rows = {}
+    for name, e in (("single", eng), ("distributed", forced)):
+        res = e.search(q, k=10)
+        plan = res._jdf.queryExecution().toString()
+        assert ("Exchange" in plan) == (name == "distributed")
+        rows[name] = [(r["doc_id"], r["score"]) for r in res.collect()]
+        assert len(rows[name]) == 10
+        assert not victims & {d for d, _ in rows[name]}, name
+    assert rows["single"] == rows["distributed"]
 
 
 def test_compaction_removes_deleted_bytes(spark, tmp_path):

@@ -12,8 +12,10 @@ from pyspark.sql import functions as F
 from hora_spark.config import EngineConfig, IndexConfig
 from hora_spark.datagen import TRANSCRIPT_SCHEMA, generate_transcripts
 from hora_spark.engine import Engine
+from hora_spark.functions.codec import decode_block, decode_posting
 from hora_spark.operators.corpus import prepare
 from hora_spark.operators.oracle import bruteforce_topk
+from hora_spark.operators.segments import NORMS_TERM
 from hora_spark.streaming.incremental import append_build, merge_segments, stream_ingest
 
 CFG = EngineConfig(index=IndexConfig(block_size=16, n_buckets=8))
@@ -219,3 +221,60 @@ def test_auto_compaction_bounds_posting_sources(spark, split_data, tmp_path):
             (r["doc_id"], r["score"]) for r in b], q
     for name in engines:
         shutil.rmtree(str(tmp_path / name), ignore_errors=True)
+
+
+def _postings_from(store, lo: int) -> dict:
+    """Every decoded posting of a doc with id >= lo in the current
+    snapshot: (term, doc_id) → (tf, dl, positions). Norms rows skipped."""
+    out = {}
+    for r in store.read("segments").collect():
+        if r["term"] == NORMS_TERM:
+            continue
+        ids, tfs = decode_posting([bytes(b) for b in r["doc_blocks"]],
+                                  [bytes(b) for b in r["tf_blocks"]])
+        dls = np.concatenate([decode_block(bytes(b), delta=False)
+                              for b in r["dl_blocks"]])
+        pos = np.concatenate([decode_block(bytes(b), delta=False)
+                              for b in r["pos_blocks"]])
+        offs = np.concatenate([[0], np.cumsum(tfs)])
+        for i, d in enumerate(ids.tolist()):
+            if d < lo:
+                continue
+            key = (r["term"], d)
+            assert key not in out, f"posting {key} stored twice"
+            out[key] = (int(tfs[i]), int(dls[i]),
+                        tuple(pos[offs[i]:offs[i + 1]].tolist()))
+    return out
+
+
+def test_append_postings_equal_single_build(spark, tmp_path):
+    """An append runs the build's own tokenize+pack and shard merge: B
+    appended to a positional, fielded index over A decodes to exactly the
+    postings a single build over A ∪ B gives B's docs — every (term,
+    doc_id, tf, dl, positions), field postings included. B's keys sort
+    after A's (a token-less row first), so doc ids coincide."""
+    cfg = EngineConfig(index=IndexConfig(
+        block_size=16, n_buckets=4, store_positions=True,
+        field_cols=("role", "tool")))
+    a = generate_transcripts(spark, 12, seed=3)
+    b = generate_transcripts(spark, 6, seed=4).withColumn(
+        "conv_id", F.concat(F.lit("x"), F.col("conv_id"))
+    ).unionByName(spark.createDataFrame(
+        [("xa", 0, "user", "...", None, None),
+         ("xa", 1, "user", "Alpha, beta ALPHA", "grep Tool", None)],
+        TRANSCRIPT_SCHEMA))
+
+    inc = Engine(spark, str(tmp_path / "inc"), cfg)
+    inc.build(a, id_col=None, order_cols=["conv_id", "turn_idx"])
+    lo = int(inc.store.meta()["next_doc_id"])
+    append_build(spark, inc.store, b, cfg=cfg, batch_id="d1")
+    one = Engine(spark, str(tmp_path / "one"), cfg)
+    one.build(a.unionByName(b), id_col=None, order_cols=["conv_id", "turn_idx"])
+
+    got = _postings_from(inc.store, lo)
+    want = _postings_from(one.store, lo)
+    assert got == want
+    assert any(t.startswith("role:") for t, _ in got)
+    assert ("tool:grep", lo + 1) in got and ("alpha", lo + 1) in got
+    assert got[("alpha", lo + 1)] == (2, 3, (0, 2))
+    assert not any(d == lo for _, d in got)  # the token-less row
